@@ -15,26 +15,108 @@ Parity contract (``/root/reference/toolkits/graph_analytics/pagerank.cpp``):
   mirrors ``--iterations`` with ``sched_allv`` (``pagerank.cpp:216-223``).
 
 Plan shape (scale-first): the edge table is joined ONCE with
-out-degrees to bake a per-edge contribution weight, then repartitioned
-by ``src`` and persisted — per superstep only the (|V|-sized) rank
-DataFrame shuffles to meet it; the message aggregation is a native
-partial+final hash aggregate (the analog of the reference's
+out-degrees to bake a per-edge contribution weight, clustered and
+sorted on ``src``, persisted and MATERIALIZED before the loop plans
+superstep 0 (:func:`_contribs_layout`).  Every superstep, superstep 0
+included, then reads the layout straight from cache: only the
+(|V|-sized) rank DataFrame meets it, and the message aggregation is a
+native partial+final hash aggregate (the analog of the reference's
 local-gather-then-master merge, ``synchronous_engine.hpp:1563-1663``).
+Materializing first matters: a layout persisted lazily while AQE is on
+is cached as an adaptive plan that has not run, its partitioning is
+unknown, and superstep 0 would re-shuffle and re-sort all |E| rows.
+
+The initial state is the out-degree ids at rank 1.0 — no |2E|-row
+vertex-table distinct.  Superstep 0's apply full-outer-joins the
+messages, which adds the vertices that have only in-edges (at old rank
+1.0), and re-hashes that one result on ``id``; later supersteps keep
+the left join, which keeps the state's hash layout.  Measured on the
+``pagerank_8m`` benchmark workload (8M edges, 8 fixed supersteps,
+local[4] on a shared 4-core VM), all of the above together: superstep
+0 16.3 s -> 4.8 s and shuffle written 254 MB -> 178 MB (traced,
+seed 1); job median 29.0 s -> 24.1 s (seed 1) and 30.5 s -> 25.3 s
+(seed 3), 5 alternating pairs each, all won.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import EdgeGraph
 from ..plans.checkpoint import CheckpointManager
-from ..plans.superstep import BSPResult, run_bsp
+from ..plans.superstep import BSPResult, no_aqe_loop, run_bsp
 
 DAMPING = 0.85
 BASE = 0.15
 
 
+def _contribs_layout(graph: EdgeGraph, csr: bool = False) -> DataFrame:
+    """The per-edge gather layout ``(src, dst, cw = 1/out_degree)``,
+    clustered and sorted on ``src`` (or keyed into CSR blocks for the
+    arrow gather when ``csr``), persisted and materialized.
+
+    Callers run under the loop's confs (``no_aqe_loop``): the edges and
+    out-degrees are both hashed on ``src``, so the join needs no
+    exchange, its sort serves the layout's own, and the build is one
+    Spark job.  Counting it here, before ``run_bsp`` plans superstep 0,
+    is what lets superstep 0 read the cached layout as-is — see the
+    module docstring."""
+    contribs = graph.edges.join(
+        graph.out_degrees.withColumnRenamed("id", "src"), "src"
+    ).select("src", "dst", (F.lit(1.0) / F.col("out_degree")).alias("cw"))
+    if csr:
+        from ..plans.arrow_gather import csr_blocks
+        layout = csr_blocks(contribs, graph.num_edge_partitions)
+    else:
+        layout = (contribs.repartition(graph.num_edge_partitions, "src")
+                  .sortWithinPartitions("src"))
+    layout = layout.persist()
+    layout.count()
+    return layout
+
+
+def _initial_state(graph: EdgeGraph, rank0: Callable[[Column], Column],
+                   budget: int) -> DataFrame:
+    """``(id, rank)`` at ``rank0(id)`` for the out-degree ids only:
+    superstep 0 adds the in-edge-only vertices (:func:`_attach_totals`),
+    so the |2E|-row ``graph.vertices`` distinct is never built.  The one
+    exception is a zero-superstep run, which must still return every
+    vertex.  Without AQE, ``run_bsp``'s persist of this state keeps the
+    out-degrees' hash layout on ``id``, so superstep 0 does not shuffle
+    the state to meet the ``src``-clustered contribution layout."""
+    ids = graph.vertices if budget == 0 else graph.out_degrees
+    return ids.select("id", rank0(F.col("id")).alias("rank"))
+
+
+def _attach_totals(state: DataFrame, msgs: DataFrame, first: bool,
+                   rank0: Callable[[Column], Column],
+                   partitions: int) -> DataFrame:
+    """``(id, rank, total)``: each vertex's gathered ``total`` (NULL when
+    it received no message).  In superstep 0 (``first``) the state holds
+    only the out-degree ids, so the join is a full outer one and an
+    in-edge-only vertex enters with its initial rank ``rank0(id)``.
+
+    A full outer join's output partitioning is unknown, so that one
+    result is re-hashed on ``id`` into the layout's ``partitions``:
+    the lineage cut keeps the hash layout, and superstep 1 meets the
+    layout without shuffling the state, like every later superstep
+    (whose left join keeps the state's layout)."""
+    if not first:
+        return state.join(msgs, state["id"] == msgs["dst"], "left")
+    vid = F.coalesce("id", "dst")
+    return state.join(msgs, state["id"] == msgs["dst"], "full_outer").select(
+        vid.alias("id"), F.coalesce(F.col("rank"), rank0(vid)).alias("rank"),
+        "total").repartition(partitions, "id")
+
+
+def _unit_rank(_: Column) -> Column:
+    return F.lit(1.0)
+
+
+@no_aqe_loop
 def pagerank(
     graph: EdgeGraph,
     tol: float = 1e-6,
@@ -103,19 +185,10 @@ def pagerank(
         return _pagerank_delta(
             graph, tol=tol, max_supersteps=max_supersteps,
             checkpoint=checkpoint, resume=resume, verbose=verbose)
-    contribs = (
-        graph.edges.join(
-            graph.out_degrees.withColumnRenamed("id", "src"), "src"
-        )
-        .select("src", "dst", (F.lit(1.0) / F.col("out_degree")).alias("cw"))
-        .repartition(graph.num_edge_partitions, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    if gather == "arrow":
-        from ..plans.arrow_gather import csr_blocks
-        contribs = csr_blocks(contribs, graph.num_edge_partitions).persist()
-    init = graph.vertices.select("id", F.lit(1.0).alias("rank"))
+    budget = max_supersteps if fixed_supersteps is None else fixed_supersteps
+    contribs = (_contribs_layout(graph, csr=gather == "arrow")
+                if budget else None)
+    init = _initial_state(graph, _unit_rank, budget)
 
     def gather_msgs(state: DataFrame) -> DataFrame:
         if gather == "arrow":
@@ -138,9 +211,9 @@ def pagerank(
             )
         return msgs.groupBy("dst").agg(F.sum("m").alias("total"))
 
-    def one_round(state: DataFrame) -> DataFrame:
-        msgs = gather_msgs(state)
-        joined = state.join(msgs, state["id"] == msgs["dst"], "left")
+    def one_round(state: DataFrame, first: bool) -> DataFrame:
+        joined = _attach_totals(state, gather_msgs(state), first, _unit_rank,
+                                graph.num_edge_partitions)
         new_rank = (F.lit(BASE)
                     + F.lit(DAMPING) * F.coalesce(F.col("total"), F.lit(0.0)))
         return joined.select(
@@ -156,8 +229,8 @@ def pagerank(
         else:
             rounds = fuse
         cur = state
-        for _ in range(rounds):
-            cur = one_round(cur.drop("__delta"))
+        for r in range(rounds):
+            cur = one_round(cur.drop("__delta"), i == 0 and r == 0)
         if fixed_supersteps is not None:
             converged = (i + 1) * fuse >= fixed_supersteps
             metrics = {"active": -1, "max_delta": float("nan"),
@@ -185,19 +258,16 @@ def pagerank(
 
         return observed, finish
 
-    chunk_budget = (max_supersteps if fixed_supersteps is None
-                    else fixed_supersteps)
-    if fuse > 1:
-        chunk_budget = -(-chunk_budget // fuse)  # ceil-div: chunks, not steps
     result = run_bsp(
         init,
         step,
-        max_supersteps=chunk_budget,
+        max_supersteps=-(-budget // fuse),  # ceil-div: chunks, not steps
         checkpoint=checkpoint,
         resume=resume,
         verbose=verbose,
     )
-    contribs.unpersist()
+    if contribs is not None:
+        contribs.unpersist()
     if fuse > 1:
         # Report true supersteps, not chunks.
         total = result.supersteps * fuse
@@ -242,27 +312,20 @@ def _pagerank_delta(
     State: ``(id long, rank double, total double, change double)``;
     the returned BSPResult's state is trimmed to ``(id, rank)``.
     """
-    contribs = (
-        graph.edges.join(
-            graph.out_degrees.withColumnRenamed("id", "src"), "src"
-        )
-        .select("src", "dst", (F.lit(1.0) / F.col("out_degree")).alias("cw"))
-        .repartition(graph.num_edge_partitions, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
+    contribs = _contribs_layout(graph)
     # Superstep 0 = signal_all: a full gather at rank 1.0 seeds the
-    # cache, then apply + scatter as usual.
+    # cache, then apply + scatter as usual.  Every vertex with an
+    # in-edge has a t0 row, so the out-degree ids complete the set.
     tot0 = contribs.groupBy("dst").agg(F.sum("cw").alias("t0"))
+    t0 = F.coalesce("t0", F.lit(0.0))
     init = (
-        graph.vertices.join(
-            tot0, graph.vertices["id"] == tot0["dst"], "left")
+        graph.out_degrees.select("id")
+        .join(tot0.withColumnRenamed("dst", "id"), "id", "full_outer")
         .select(
             "id",
-            (F.lit(BASE) + F.lit(DAMPING) * F.coalesce("t0", F.lit(0.0))).alias("rank"),
-            F.coalesce("t0", F.lit(0.0)).alias("total"),
-            (F.lit(BASE) + F.lit(DAMPING) * F.coalesce("t0", F.lit(0.0))
-             - F.lit(1.0)).alias("change"),
+            (F.lit(BASE) + F.lit(DAMPING) * t0).alias("rank"),
+            t0.alias("total"),
+            (F.lit(BASE) + F.lit(DAMPING) * t0 - F.lit(1.0)).alias("change"),
         )
     )
 
@@ -331,6 +394,7 @@ def total_rank(ranks: DataFrame) -> float:
     return ranks.agg(F.sum("rank")).first()[0]
 
 
+@no_aqe_loop
 def personalized_pagerank(
     graph: EdgeGraph,
     seeds: list[int],
@@ -355,18 +419,13 @@ def personalized_pagerank(
     """
     if not seeds:
         raise ValueError("personalized_pagerank: seeds must be non-empty")
-    contribs = (
-        graph.edges.join(
-            graph.out_degrees.withColumnRenamed("id", "src"), "src"
-        )
-        .select("src", "dst", (F.lit(1.0) / F.col("out_degree")).alias("cw"))
-        .repartition(graph.num_edge_partitions, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    is_seed = F.col("id").isin([int(s) for s in seeds])
-    base = F.when(is_seed, F.lit(BASE)).otherwise(F.lit(0.0))
-    init = graph.vertices.select("id", base.alias("rank"))
+    seed_ids = [int(s) for s in seeds]
+
+    def base(vid: Column) -> Column:
+        return F.when(vid.isin(seed_ids), F.lit(BASE)).otherwise(F.lit(0.0))
+
+    contribs = _contribs_layout(graph) if max_supersteps else None
+    init = _initial_state(graph, base, max_supersteps)
 
     def step(state: DataFrame, i: int):
         msgs = (
@@ -374,8 +433,9 @@ def personalized_pagerank(
             .select("dst", (F.col("rank") * F.col("cw")).alias("m"))
             .groupBy("dst").agg(F.sum("m").alias("total"))
         )
-        joined = state.join(msgs, state["id"] == msgs["dst"], "left")
-        new_rank = base + F.lit(DAMPING) * F.coalesce(
+        joined = _attach_totals(state, msgs, i == 0, base,
+                                graph.num_edge_partitions)
+        new_rank = base(F.col("id")) + F.lit(DAMPING) * F.coalesce(
             F.col("total"), F.lit(0.0))
         new_state = joined.select(
             "id", new_rank.alias("rank"),
@@ -394,5 +454,6 @@ def personalized_pagerank(
     result = run_bsp(
         init, step, max_supersteps=max_supersteps,
         checkpoint=checkpoint, resume=resume, verbose=verbose)
-    contribs.unpersist()
+    if contribs is not None:
+        contribs.unpersist()
     return result

@@ -78,15 +78,17 @@ FRAME_H = 4
 _FRAME_BYTES = FRAME_W * FRAME_H * 3
 
 
-def _pnm_header(buf: bytes, magic: bytes) -> tuple[int, int, int, int]:
-    """Parse a binary Netpbm header: returns (width, height, maxval,
-    data_offset).  Whitespace-separated tokens, ``#`` comments run to
-    end of line, exactly one whitespace byte separates the last header
-    token from the raster (per the Netpbm format spec)."""
-    if buf[:2] != magic:
+def _pnm_header(buf: bytes, magic: bytes,
+                start: int = 0) -> tuple[int, int, int, int]:
+    """Parse a binary Netpbm header that begins at ``buf[start]``:
+    returns (width, height, maxval, data_offset), the offset counted
+    from the start of ``buf``.  Whitespace-separated tokens, ``#``
+    comments run to end of line, exactly one whitespace byte separates
+    the last header token from the raster (per the Netpbm format spec)."""
+    if buf[start:start + 2] != magic:
         raise ValueError(f"not a {magic.decode()} payload")
     tokens: list[int] = []
-    i = 2
+    i = start + 2
     n = len(buf)
     while len(tokens) < 3:
         while i < n and buf[i:i + 1].isspace():
@@ -194,16 +196,18 @@ def sample_video_frames(payload: bytes, every_n: int) -> list[np.ndarray]:
     frames: list[np.ndarray] = []
     i, idx = 0, 0
     while i < len(buf):
-        w, h, maxval, off = _pnm_header(buf[i:], b"P6")
+        # parse in place: a buf[i:] slice per frame would copy the rest
+        # of the stream each time, O(n^2) in the payload size
+        w, h, maxval, off = _pnm_header(buf, b"P6", i)
         if not (0 < maxval <= 255):
             raise ValueError(f"unsupported maxval {maxval} (8-bit only)")
         need = w * h * 3
-        raster = np.frombuffer(buf, dtype=np.uint8, count=need, offset=i + off)
-        if raster.size < need:
+        if off + need > len(buf):
             raise ValueError("truncated frame raster")
         if idx % every_n == 0:
-            frames.append(raster.reshape(h, w, 3))
-        i += off + need
+            frames.append(np.frombuffer(buf, dtype=np.uint8, count=need,
+                                        offset=off).reshape(h, w, 3))
+        i = off + need
         idx += 1
     return frames
 

@@ -181,6 +181,18 @@ def run_bsp(
     measured win; pass False to keep AQE re-planning inside supersteps
     (only sensible when skew is not already handled by explicit
     salting).
+
+    Layout rule: materialize every loop-invariant cached layout (an
+    edge table clustered for the per-superstep join) BEFORE calling
+    this.  A layout persisted lazily while AQE is on is cached as an
+    adaptive plan that has not run, whose output partitioning is
+    unknown, so superstep 0 is planned with an |E|-row exchange and
+    sort in front of the cache; from superstep 1 on the cache is known
+    and read as-is.  Build the layout without AQE (``no_aqe_loop``)
+    and count it once.  PageRank on 8M edges, with its state also
+    started from the out-degree ids (4-core VM): superstep 0
+    16.3 s -> 4.8 s, shuffle written 254 MB -> 178 MB
+    (``algos/pagerank.py``).
     """
     ckpt = checkpoint or CheckpointManager(None)
     start_step = 0

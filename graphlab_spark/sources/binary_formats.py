@@ -41,6 +41,7 @@ from __future__ import annotations
 import glob as _glob
 import gzip as _gzip
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,28 +53,35 @@ _RECORD_SCHEMA = "rtype int, src long, dst long"
 _MANIFEST_SCHEMA = "file string, n_records long"
 
 
-def _require_local_prefix(prefix: str, op: str) -> None:
-    """These readers/writers glob and open() the driver/executor-local
+def _local_prefix(prefix: str, op: str) -> str:
+    """The plain filesystem path for ``prefix``.
+
+    These readers/writers glob and open() the driver/executor-local
     filesystem, which is only correct when driver and executors share
     it (local / local-cluster mode, or a shared mount).  A remote URI
     (hdfs://, s3a://...) would silently scatter shards across executor-
     local disks, so fail fast instead (ADVICE r4; the reference's
     save_direct routes such paths through Hadoop FS —
-    distributed_graph.hpp:3258-3341)."""
-    scheme = prefix.split("://", 1)[0] if "://" in prefix else ""
-    if scheme and scheme != "file":
+    distributed_graph.hpp:3258-3341).  A ``file:`` URI names a local
+    path, so its scheme is stripped: used literally, ``file:///tmp/g``
+    would land in a relative ``./file:/tmp/`` directory."""
+    parsed = urlparse(prefix)
+    if parsed.scheme == "file" and parsed.netloc in ("", "localhost"):
+        return parsed.path
+    if "://" in prefix:
         raise ValueError(
             f"{op}: {prefix!r} is a remote URI; the bintsv4/graphjrl "
             "shard IO assumes a filesystem shared between driver and "
             "executors (local mode). Write to a local/shared path and "
             "distcp, or use the parquet checkpoint/bucketed formats "
             "for cluster-native IO.")
+    return prefix
 
 
 def _input_files(spark: SparkSession, prefix: str) -> DataFrame:
     """All ``prefix_k_of_n[.gz]`` shards (or ``prefix`` itself if it is
     one plain file) as a ``binaryFile`` DataFrame — (path, content)."""
-    _require_local_prefix(prefix, "load")
+    prefix = _local_prefix(prefix, "load")
     paths = sorted(_glob.glob(prefix + "_*_of_*") + _glob.glob(prefix))
     paths = [p for p in paths if os.path.isfile(p)]
     if not paths:
@@ -132,7 +140,7 @@ def save_bintsv4(edges: DataFrame, prefix: str, n_shards: int = 4,
     vertices (rows of ``vertices`` touching no edge) get the
     0xFFFFFFFF sentinel, mirroring ``save_bintsv4_to_stream``.
     Returns the (file, n_records) manifest."""
-    _require_local_prefix(prefix, "save_bintsv4")
+    prefix = _local_prefix(prefix, "save_bintsv4")
     recs = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"),
                         F.lit(False).alias("__iso"))
     if vertices is not None:
@@ -267,7 +275,7 @@ def save_graphjrl(edges: DataFrame, prefix: str, n_shards: int = 4,
     edge data): every vertex row (if given) becomes a ``\\x00`` record
     and every edge a ``\\x01`` record, escaped per
     ``graphjrl_writer``.  Returns the (file, n_records) manifest."""
-    _require_local_prefix(prefix, "save_graphjrl")
+    prefix = _local_prefix(prefix, "save_graphjrl")
     if vid_bytes not in (4, 8):
         raise ValueError("vid_bytes must be 4 (USE_VID32) or 8")
     recs = edges.select(F.lit(1).alias("rtype"),

@@ -13,6 +13,7 @@ bytes that follow the reference layouts exactly:
 from __future__ import annotations
 
 import gzip
+import os
 import struct
 
 import pytest
@@ -189,3 +190,22 @@ def test_binary_io_rejects_remote_uris(spark, tmp_path):
         save_graphjrl(edges, "s3a://bucket/g")
     with pytest.raises(ValueError, match="remote URI"):
         load_bintsv4(spark, "hdfs://nn:8020/tmp/g")
+
+
+def test_binary_io_file_uri_roundtrip(spark, tmp_path, monkeypatch):
+    """A ``file://`` prefix names a local path: shards land under that
+    path (not a literal ``./file:`` directory) and load back through
+    either spelling."""
+    monkeypatch.chdir(tmp_path)
+    edges = spark.createDataFrame(EDGES, "src long, dst long")
+    plain = str(tmp_path / "out" / "g")
+    for save, load in ((save_bintsv4, load_bintsv4),
+                       (save_graphjrl, load_graphjrl)):
+        manifest = save(edges, "file://" + plain, n_shards=2)
+        assert all(f.startswith(plain + "_") for f, _ in manifest)
+        assert not (tmp_path / "file:").exists()
+        for prefix in ("file://" + plain, plain):
+            got = {(r["src"], r["dst"]) for r in load(spark, prefix).collect()}
+            assert got == set(EDGES)
+        for f, _ in manifest:
+            os.remove(f)

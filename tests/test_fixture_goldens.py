@@ -10,6 +10,7 @@ import math
 import pytest
 
 from graphlab_spark import EdgeGraph
+from graphlab_spark.plans import CheckpointManager
 from graphlab_spark.algos import (
     component_size_histogram,
     connected_components,
@@ -36,11 +37,39 @@ def test_pagerank_golden(fixture_graph):
     assert total_rank(res.state) == pytest.approx(sum(GOLDEN_PR.values()), abs=1e-6)
 
 
-def test_pagerank_fixed_iterations(fixture_graph):
-    res = pagerank(fixture_graph, fixed_supersteps=30)
-    got = {r.id: r.rank for r in res.state.collect()}
+def _assert_golden_pr(state):
+    got = {r.id: r.rank for r in state.collect()}
+    assert set(got) == set(GOLDEN_PR)
     for k, v in GOLDEN_PR.items():
         assert got[k] == pytest.approx(v, abs=1e-6)
+
+
+def test_pagerank_fixed_iterations(fixture_graph):
+    _assert_golden_pr(pagerank(fixture_graph, fixed_supersteps=30).state)
+
+
+# Vertex 5 has only in-edges and 1-3 only out-edges: the state starts
+# from the out-degree ids, and superstep 0 must add vertex 5 on every
+# gather path (tolerance and fixed modes: the two tests above).
+@pytest.mark.parametrize("kw", [
+    {"fixed_supersteps": 30, "fuse": 2},
+    {"tol": 1e-9, "gather": "arrow"},
+    {"tol": 1e-9, "salt_hubs": 4},
+], ids=["fuse2", "arrow", "salted"])
+def test_pagerank_vertex_set(fixture_graph, kw):
+    _assert_golden_pr(pagerank(fixture_graph, resume=False, **kw).state)
+
+
+def test_pagerank_resume_from_superstep0_checkpoint(fixture_graph, tmp_path):
+    ck = str(tmp_path / "ck")
+    first = pagerank(fixture_graph, max_supersteps=1,
+                     checkpoint=CheckpointManager(ck, every=1), resume=False)
+    assert first.supersteps == 1 and not first.converged
+    assert {r.id for r in first.state.collect()} == set(GOLDEN_PR)
+    res = pagerank(fixture_graph, tol=1e-9,
+                   checkpoint=CheckpointManager(ck, every=1), resume=True)
+    assert res.converged and res.history[0]["superstep"] == 1
+    _assert_golden_pr(res.state)
 
 
 def test_connected_components_golden(fixture_graph):

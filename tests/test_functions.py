@@ -238,6 +238,27 @@ def test_video_stream_frame_sampling():
     assert len(M.sample_video_frames(stream, 1)) == 5
 
 
+def test_video_stream_many_frames_match_per_frame_decode():
+    """A long multi-frame P6 stream (mixed frame sizes, a header
+    comment) decodes to exactly the frames decode_image gives for each
+    frame on its own; headers are parsed in place, not from a copy of
+    the remaining stream."""
+    import numpy as np
+    rng = np.random.default_rng(5)
+    frames = [rng.integers(0, 256, (1 + i % 3, 2 + i % 5, 3), np.uint8)
+              for i in range(400)]
+    encoded = [M.encode_ppm(f) for f in frames]
+    encoded[7] = encoded[7].replace(b"P6\n", b"P6\n# frame 7\n", 1)
+    stream = b"".join(encoded)
+    for every_n in (1, 3):
+        picked = M.sample_video_frames(stream, every_n)
+        want = [M.decode_image(e) for e in encoded[::every_n]]
+        assert len(picked) == len(want)
+        assert all(np.array_equal(p, w) for p, w in zip(picked, want))
+    with pytest.raises(ValueError, match="truncated"):
+        M.sample_video_frames(stream[:-1], 1)
+
+
 def test_extract_features_uses_decoded_content(spark, docs):
     """Features over synthesized real payloads must come from DECODED
     values, not raw payload bytes: for audio the decoded int16 samples

@@ -125,8 +125,11 @@ def test_fuse_rejects_bad_combos(fixture_graph):
 
 
 def test_pagerank_zero_fixed_supersteps(fixture_graph):
-    """pagerank(fixed_supersteps=0): zero superstep jobs, init ranks."""
+    """pagerank(fixed_supersteps=0): zero superstep jobs, init ranks
+    for EVERY vertex — including vertex 5, which has only in-edges and
+    so is not among the out-degree ids a running superstep starts from."""
     from graphlab_spark.algos.pagerank import pagerank
     res = pagerank(fixture_graph, fixed_supersteps=0)
     assert res.supersteps == 0
-    assert {r["rank"] for r in res.state.collect()} == {1.0}
+    got = {r["id"]: r["rank"] for r in res.state.collect()}
+    assert got == {v: 1.0 for v in GOLDEN_PR}

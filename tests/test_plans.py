@@ -159,6 +159,20 @@ def test_bsp_loop_disables_and_restores_aqe(spark):
         ss.run_bsp = orig
     assert a == b
 
+    # pagerank pins the loop confs for its whole call (its layout is
+    # planned without AQE too), so the run that really keeps AQE on
+    # inside the loop is one that leaves the pins to run_bsp
+    from graphlab_spark.algos import connected_components
+    cc = importlib.import_module("graphlab_spark.algos.connected_components")
+    c_a = sorted(map(tuple, connected_components(g).state.collect()))
+    cc_orig = cc.run_bsp
+    cc.run_bsp = run_bsp_aqe
+    try:
+        c_b = sorted(map(tuple, connected_components(g).state.collect()))
+    finally:
+        cc.run_bsp = cc_orig
+    assert c_a == c_b
+
     # decorator: restores on exception too
     @no_aqe_loop
     def boom(df):
@@ -217,3 +231,80 @@ def test_one_job_per_superstep(spark):
     # count (2 jobs/superstep = 8+)
     assert jobs <= 5, f"expected <=1 job/superstep (+1 build), got {jobs}/4"
     g.unpersist()
+
+
+def _walk_above_caches(node, path=()):
+    """Yield (node, ancestors) for every physical-plan node, without
+    descending into cached relations (their build plans ran already)."""
+    yield node, path
+    if node.nodeName() == "InMemoryTableScan":
+        return
+    children = node.children()
+    for k in range(children.size()):
+        yield from _walk_above_caches(children.apply(k), path + (node,))
+
+
+def test_pagerank_superstep0_reads_layout_from_cache(spark, monkeypatch):
+    """Superstep 0 must read the contribution layout straight from its
+    cache, as every later superstep does: the plan's only
+    ENSURE_REQUIREMENTS exchange is the message aggregation, and no
+    exchange or sort sits between the layout's cache scan and the join.
+    A layout persisted lazily under AQE is planned as a plan that has
+    not run, and superstep 0 then re-shuffles and re-sorts all |E|
+    cached edges.  PageRank also never builds the |2E|-row vertex
+    table: the state starts from the out-degree ids, and superstep 0's
+    full outer join is re-hashed on id once, so superstep 1 already has
+    the steady one-exchange shape."""
+    import importlib
+
+    from graphlab_spark import EdgeGraph
+    from graphlab_spark.sources.parsers import load_synthetic_powerlaw
+
+    # the module, not the package's re-exported pagerank function
+    pr = importlib.import_module("graphlab_spark.algos.pagerank")
+    plans = []
+    orig = pr.run_bsp
+
+    def spy_run_bsp(init, step, **kw):
+        def spy(state, i):
+            out = step(state, i)
+            # planned here, under the loop's own confs
+            plans.append(out[0]._jdf.queryExecution().executedPlan())
+            return out
+        return orig(init, spy, **kw)
+
+    def exchanges(nodes):
+        return [n.simpleString(100) for n, _ in nodes
+                if n.nodeName() == "Exchange"]
+
+    monkeypatch.setattr(pr, "run_bsp", spy_run_bsp)
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    # edge partitions = shuffle partitions, so the apply join reuses the
+    # message aggregation's hash layout
+    g = EdgeGraph(load_synthetic_powerlaw(spark, 400, seed=3))
+    try:
+        res = pr.pagerank(g, fixed_supersteps=2, resume=False)
+        assert res.state.count() > 0
+        assert "vertices" not in g.__dict__
+        step0, step1 = (list(_walk_above_caches(p)) for p in plans)
+        ex0 = exchanges(step0)
+        ensure = [e for e in ex0 if "ENSURE_REQUIREMENTS" in e]
+        assert len(ensure) == 1, ex0
+        assert "hashpartitioning(dst" in ensure[0]
+        rehash = [e for e in ex0 if e not in ensure]
+        assert len(rehash) == 1 and "hashpartitioning(id" in rehash[0], ex0
+        ex1 = exchanges(step1)
+        assert len(ex1) == 1 and "hashpartitioning(dst" in ex1[0], ex1
+        layout_scans = [path for n, path in step0 + step1
+                        if n.nodeName() == "InMemoryTableScan"
+                        and "cw" in n.simpleString(100)]
+        assert len(layout_scans) == 2
+        for path in layout_scans:
+            above = []
+            for anc in reversed(path):
+                if anc.nodeName() == "SortMergeJoin":
+                    break
+                above.append(anc.nodeName())
+            assert not {"Exchange", "Sort"} & set(above), above
+    finally:
+        g.unpersist()
