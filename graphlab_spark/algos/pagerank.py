@@ -23,6 +23,8 @@ reads the layout straight from cache: only the (|V|-sized) rank
 DataFrame meets it, and the message aggregation is a native
 partial+final hash aggregate (the analog of the reference's
 local-gather-then-master merge, ``synchronous_engine.hpp:1563-1663``).
+It is the only gather: an Arrow CSR-block gather and a hub-salted
+two-level sum were both slower on ``pagerank_8m`` and were removed.
 
 The initial state is the out-degree ids at rank 1.0 — no |2E|-row
 vertex-table distinct.  Superstep 0's apply full-outer-joins the
@@ -51,10 +53,9 @@ DAMPING = 0.85
 BASE = 0.15
 
 
-def _contribs_layout(graph: EdgeGraph, csr: bool = False) -> DataFrame:
+def _contribs_layout(graph: EdgeGraph) -> DataFrame:
     """The lazy per-edge gather layout ``(src, dst, cw = 1/out_degree)``,
-    clustered and sorted on ``src`` (or keyed into CSR blocks for the
-    arrow gather when ``csr``), for ``run_bsp``'s ``layouts``.
+    clustered and sorted on ``src``, for ``run_bsp``'s ``layouts``.
 
     Built under the loop confs, the edges and the out-degrees view are
     both hashed on ``src``, so the join needs no exchange, its sort
@@ -63,9 +64,6 @@ def _contribs_layout(graph: EdgeGraph, csr: bool = False) -> DataFrame:
     contribs = graph.edges.join(
         graph.out_degrees.withColumnRenamed("id", "src"), "src"
     ).select("src", "dst", (F.lit(1.0) / F.col("out_degree")).alias("cw"))
-    if csr:
-        from ..plans.arrow_gather import csr_blocks
-        return csr_blocks(contribs, graph.num_edge_partitions)
     return (contribs.repartition(graph.num_edge_partitions, "src")
             .sortWithinPartitions("src"))
 
@@ -81,6 +79,16 @@ def _initial_state(graph: EdgeGraph, rank0: Callable[[Column], Column],
     the state to meet the ``src``-clustered contribution layout."""
     ids = graph.vertices if budget == 0 else graph.out_degrees
     return ids.select("id", rank0(F.col("id")).alias("rank"))
+
+
+def _gather(contribs: DataFrame, state: DataFrame) -> DataFrame:
+    """``(dst, total)``: the sum of ``rank * cw`` over each vertex's
+    in-edges.  The hash aggregate pre-sums a hub's messages per task
+    before its one shuffle on ``dst`` (the reference's per-replica
+    partial gathers merged at the master)."""
+    return (contribs.join(state, contribs["src"] == state["id"])
+            .select("dst", (F.col("rank") * F.col("cw")).alias("m"))
+            .groupBy("dst").agg(F.sum("m").alias("total")))
 
 
 def _attach_totals(state: DataFrame, msgs: DataFrame, first: bool,
@@ -116,69 +124,31 @@ def pagerank(
     checkpoint: CheckpointManager | None = None,
     resume: bool = True,
     verbose: bool = False,
-    gather: str = "expr",
-    salt_hubs: int | None = None,
     delta_cache: bool = False,
 ) -> BSPResult:
     """Returns BSPResult whose state is ``(id long, rank double)``.
 
-    ``gather``: 'expr' (default) keeps the whole superstep in Catalyst
-    codegen; 'arrow' routes the gather through the CSR-block
-    pandas/Arrow kernel (``plans/arrow_gather.py``) — numerically
-    equivalent (same monoid, different float-sum order), there for
-    monoids the expression path can't express.
-
-    ``salt_hubs``: when set, the message reduction is two-level
-    (``operators/salting.py``): partial sums per (dst, salt) then a
-    final sum per dst — the explicit hub treatment beyond AQE for
-    destinations whose in-degree exceeds any single-partition budget.
-    Results are exactly equal (double addition is reordered the same
-    way Spark's own partial aggregation already reorders it).
+    Every superstep gathers with :func:`_gather`.  ``delta_cache`` runs
+    the reference's ``post_delta`` gather cache instead
+    (:func:`_pagerank_delta`), in tolerance mode only.
     """
-    if gather == "arrow" and salt_hubs:
-        raise ValueError(
-            "pagerank: salt_hubs applies only to the expression gather "
-            "path; the arrow/CSR kernel does its own per-partition "
-            "partial sums (combine gather='arrow' with salt_hubs=None)")
     if delta_cache:
-        if gather == "arrow" or salt_hubs or fixed_supersteps is not None:
+        if fixed_supersteps is not None:
             raise ValueError(
-                "pagerank: delta_cache is the dynamic tolerance mode — "
-                "it composes with neither gather='arrow', salt_hubs, nor "
-                "fixed_supersteps (the reference likewise gates the delta "
-                "cache on the dynamic scheduler, pagerank.cpp:108-127)")
+                "pagerank: delta_cache is the dynamic tolerance mode and "
+                "does not compose with fixed_supersteps (the reference "
+                "likewise gates the delta cache on the dynamic scheduler, "
+                "pagerank.cpp:108-127)")
         return _pagerank_delta(
             graph, tol=tol, max_supersteps=max_supersteps,
             checkpoint=checkpoint, resume=resume, verbose=verbose)
     budget = max_supersteps if fixed_supersteps is None else fixed_supersteps
-    contribs = (_contribs_layout(graph, csr=gather == "arrow")
-                if budget else None)
+    contribs = _contribs_layout(graph) if budget else None
     init = _initial_state(graph, _unit_rank, budget)
 
-    def gather_msgs(state: DataFrame) -> DataFrame:
-        if gather == "arrow":
-            from ..plans.arrow_gather import arrow_gather, weighted_sum_kernel
-            partials = arrow_gather(
-                contribs, state, weighted_sum_kernel,
-                "dst long, m double", graph.num_edge_partitions)
-            return partials.groupBy("dst").agg(F.sum("m").alias("total"))
-        msgs = (
-            contribs.join(state, contribs["src"] == state["id"])
-            .select("dst", (F.col("rank") * F.col("cw")).alias("m"))
-        )
-        if salt_hubs:
-            from ..operators.salting import salted_agg
-            return salted_agg(
-                msgs, ["dst"],
-                [F.sum("m").alias("pm")],
-                [F.sum("pm").alias("total")],
-                n_salts=salt_hubs,
-            )
-        return msgs.groupBy("dst").agg(F.sum("m").alias("total"))
-
     def step(state: DataFrame, i: int):
-        joined = _attach_totals(state, gather_msgs(state), i == 0, _unit_rank,
-                                graph.num_edge_partitions)
+        joined = _attach_totals(state, _gather(contribs, state), i == 0,
+                                _unit_rank, graph.num_edge_partitions)
         new_rank = (F.lit(BASE)
                     + F.lit(DAMPING) * F.coalesce(F.col("total"), F.lit(0.0)))
         if fixed_supersteps is not None:
@@ -365,12 +335,7 @@ def personalized_pagerank(
     init = _initial_state(graph, base, max_supersteps)
 
     def step(state: DataFrame, i: int):
-        msgs = (
-            contribs.join(state, contribs["src"] == state["id"])
-            .select("dst", (F.col("rank") * F.col("cw")).alias("m"))
-            .groupBy("dst").agg(F.sum("m").alias("total"))
-        )
-        joined = _attach_totals(state, msgs, i == 0, base,
+        joined = _attach_totals(state, _gather(contribs, state), i == 0, base,
                                 graph.num_edge_partitions)
         new_rank = base(F.col("id")) + F.lit(DAMPING) * F.coalesce(
             F.col("total"), F.lit(0.0))

@@ -34,7 +34,6 @@ def sssp(
     resume: bool = True,
     verbose: bool = False,
     track_parent: bool = False,
-    gather: str = "expr",
 ) -> BSPResult:
     """Returns BSPResult whose state is ``(id long, distance double)``
     (+ ``parent long`` when ``track_parent``); unreachable vertices have
@@ -45,23 +44,14 @@ def sssp(
     the state the reference's path-extraction app walks
     (``/root/reference/apps/get_sp/sssp_getpath.cpp``).
 
-    ``gather``: 'expr' (default, Catalyst join+min); 'arrow' routes the
-    relax step through the CSR-block pandas/Arrow kernel
-    (``plans/arrow_gather.min_plus_kernel``) — numerically identical
-    (min is order-insensitive), there to keep the vectorized-UDF path
-    exercised by a second monoid shape (tropical min-plus vs PageRank's
-    sum).  Not combinable with ``track_parent`` (the kernel reduces to
-    the min distance only).
+    The step relaxes over ``graph.edges`` (directed) or
+    ``graph.symmetric_edges``; that view is the loop's layout, filled
+    before superstep 0.  The ``__w`` projection stays lazy, so the
+    edges are cached once.
     """
-    if gather == "arrow" and track_parent:
-        raise ValueError("sssp: gather='arrow' does not carry parent "
-                         "pointers; use the expression path")
-    edges = graph.edges if directed else graph.symmetric_edges
+    view = graph.edges if directed else graph.symmetric_edges
     w = F.col(weight_col) if weight_col else F.lit(1.0)
-    edges = edges.select("src", "dst", w.alias("__w"))
-    if gather == "arrow":
-        from ..plans.arrow_gather import csr_blocks
-        edges = csr_blocks(edges, graph.num_edge_partitions)
+    edges = view.select("src", "dst", w.alias("__w"))
     src_lit = F.array(*[F.lit(int(s)) for s in sources])
     init_cols = [
         F.when(F.array_contains(src_lit, F.col("id")), F.lit(0.0))
@@ -75,26 +65,15 @@ def sssp(
 
     def step(state: DataFrame, i: int):
         active = state.filter(F.col("__changed")).select("id", "distance")
-        if gather == "arrow":
-            from ..plans.arrow_gather import arrow_gather, min_plus_kernel
-            partials = arrow_gather(
-                edges, active, min_plus_kernel,
-                "dst long, m double", graph.num_edge_partitions)
-            msgs = partials.groupBy("dst").agg(F.min("m").alias("received"))
-        else:
-            relaxed = edges.join(active, edges["src"] == active["id"]).select(
-                "dst", (F.col("distance") + F.col("__w")).alias("cand"),
-                F.col("src").alias("via"))
-            if track_parent:
-                msgs = relaxed.groupBy("dst").agg(
-                    F.min("cand").alias("received"),
-                    F.min_by("via", F.struct(F.col("cand").alias("d"),
-                                             F.col("via").alias("v"))
-                             ).alias("rvia"),
-                )
-            else:
-                msgs = relaxed.groupBy("dst").agg(
-                    F.min("cand").alias("received"))
+        relaxed = edges.join(active, edges["src"] == active["id"]).select(
+            "dst", (F.col("distance") + F.col("__w")).alias("cand"),
+            F.col("src").alias("via"))
+        aggs = [F.min("cand").alias("received")]
+        if track_parent:
+            aggs.append(F.min_by("via", F.struct(F.col("cand").alias("d"),
+                                                 F.col("via").alias("v"))
+                                 ).alias("rvia"))
+        msgs = relaxed.groupBy("dst").agg(*aggs)
         joined = state.join(msgs, state["id"] == msgs["dst"], "left")
         improved = F.coalesce("received", "distance") < F.col("distance")
         out_cols = [
@@ -125,7 +104,7 @@ def sssp(
         checkpoint=checkpoint,
         resume=resume,
         verbose=verbose,
-        layouts=[edges] if gather == "arrow" else [],
+        layouts=[view],
     )
     result.state = result.state.drop("__changed")
     return result

@@ -1,7 +1,6 @@
 from .aggregates import (AggregatorRegistry, argmax_vertex, histogram,
                          map_reduce_edges, map_reduce_vertices)
 from .join_ops import injective_vertex_join
-from .salting import hub_ids, salted_agg, with_salt
 from .vertex_ops import (select_vertices, transform_edges, transform_vertices,
                          vset_intersect, vset_invert, vset_minus, vset_union)
 from .vertex_program import (CC_PROGRAM, MERGES, PAGERANK_PROGRAM,

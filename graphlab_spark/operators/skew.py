@@ -9,9 +9,10 @@ it with two aggregation-only passes (no collect of raw data, no window
 sorts):
 
 - ``key_skew_report``: per-key count quantiles + the top-k hot keys +
-  a recommended salt count sized so the hottest key's partial groups
-  fit a target partition budget — feed it straight into
-  ``salted_agg(n_salts=...)`` / ``pagerank(salt_hubs=...)``;
+  a recommended salt count sized so the hottest key's rows fit a
+  target partition budget — for a join keyed on a skewed column.  The
+  engine's gathers need no salt: their partial aggregate pre-sums a
+  hub's messages per task before the shuffle;
 - ``partition_balance``: realized rows per partition of a DataFrame
   (max/mean balance ratio) — the same signal the checkpoint manifests
   record per superstep, available ad hoc.

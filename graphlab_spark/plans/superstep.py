@@ -57,8 +57,8 @@ class _no_aqe:
 
     - ``spark.sql.adaptive.enabled`` -> false.  A superstep's plan is
       shape-identical every iteration — partition counts are fixed up
-      front (num_edge_partitions / shuffle_partitions) and skew is
-      handled explicitly (hub salting), so AQE has nothing left to
+      front (num_edge_partitions / shuffle_partitions) and the partial
+      aggregate absorbs hub skew, so AQE has nothing left to
       decide; its per-stage re-optimization and shuffle-stat collection
       are pure driver overhead that dominates when per-superstep work
       is small.  Measured (interleaved warm A/B, BASELINE.md §5):

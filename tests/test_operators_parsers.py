@@ -22,7 +22,6 @@ from graphlab_spark.operators.aggregates import (
     map_reduce_vertices,
 )
 from graphlab_spark.operators.join_ops import injective_vertex_join
-from graphlab_spark.operators.salting import hub_ids, salted_agg
 from graphlab_spark.operators.vertex_ops import (
     select_vertices,
     transform_vertices,
@@ -152,7 +151,7 @@ def test_injective_join_validates(spark):
         injective_vertex_join(left, dup, "id", "id", validate=True)
 
 
-# -- aggregates + salting ----------------------------------------------------
+# -- aggregates -------------------------------------------------------------
 
 def test_map_reduce_and_registry(fixture_graph):
     verts = fixture_graph.vertices.select("id", F.lit(1.0).alias("rank"))
@@ -170,23 +169,6 @@ def test_argmax_and_histogram(fixture_graph):
     assert top["id"] in (0, 5) and top["degree"] == 4
     h = {r["value"]: r["count"] for r in histogram(deg, "degree").collect()}
     assert h == {4: 2, 2: 3}
-
-
-def test_salted_agg_matches_plain(fixture_graph):
-    """Two-level (hub-salted) aggregation must equal the plain agg."""
-    msgs = fixture_graph.edges.select("dst", F.lit(1.0).alias("m"))
-    plain = {(r["dst"], r["s"]) for r in
-             msgs.groupBy("dst").agg(F.sum("m").alias("s")).collect()}
-    salted = {(r["dst"], r["s"]) for r in
-              salted_agg(msgs, ["dst"],
-                         [F.sum("m").alias("ps")],
-                         [F.sum("ps").alias("s")], n_salts=4).collect()}
-    assert salted == plain
-
-
-def test_hub_ids(fixture_graph):
-    assert {r["id"] for r in
-            hub_ids(fixture_graph.degrees, threshold=3).collect()} == {0, 5}
 
 
 # -- determinism across parallelism (SURVEY §5) ------------------------------

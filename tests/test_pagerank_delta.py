@@ -65,10 +65,6 @@ def test_delta_cache_frontier_shrinks(spark):
 
 def test_delta_cache_rejects_bad_combos(fixture_graph):
     with pytest.raises(ValueError):
-        pagerank(fixture_graph, delta_cache=True, gather="arrow")
-    with pytest.raises(ValueError):
-        pagerank(fixture_graph, delta_cache=True, salt_hubs=4)
-    with pytest.raises(ValueError):
         pagerank(fixture_graph, delta_cache=True, fixed_supersteps=3)
 
 

@@ -209,7 +209,9 @@ def _loop_cases():
     from graphlab_spark.algos import ad3, coloring, dd, diameter, kcore, lbp, mplp
     from graphlab_spark.algos.connected_components import connected_components
     from graphlab_spark.algos.hits import hits
-    from graphlab_spark.algos.pagerank import pagerank
+    from graphlab_spark.algos.pagerank import pagerank, personalized_pagerank
+    from graphlab_spark.algos.sssp import sssp
+    from graphlab_spark.operators.vertex_program import PAGERANK_PROGRAM
 
     def coloring_run(fn):
         def run(g, n):
@@ -229,6 +231,16 @@ def _loop_cases():
 
     return {
         "pagerank": lambda g, n: pagerank(g, fixed_supersteps=n, resume=False),
+        # tolerance 0 never converges before the cap on the test graph
+        "pagerank_delta_cache": lambda g, n: pagerank(
+            g, tol=0.0, max_supersteps=n, delta_cache=True, resume=False),
+        "personalized_pagerank": lambda g, n: personalized_pagerank(
+            g, [100], tol=0.0, max_supersteps=n, resume=False),
+        "pagerank_program": lambda g, n: PAGERANK_PROGRAM.run(
+            g, fixed_supersteps=n, resume=False),
+        "sssp": lambda g, n: sssp(g, [100], max_supersteps=n, resume=False),
+        "sssp_directed": lambda g, n: sssp(
+            g, [100], directed=True, max_supersteps=n, resume=False),
         "connected_components":
             lambda g, n: connected_components(g, max_supersteps=n, resume=False),
         "hits": lambda g, n: hits(g, supersteps=n, resume=False),
